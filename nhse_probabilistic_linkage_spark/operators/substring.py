@@ -43,11 +43,16 @@ def fingerprint_keys(
 ) -> DataFrame:
     """Explode fingerprints to the (id, band_id, band_key) shape shared with
     the LSH band table, so candidate_pairs() (cap + salt + dedup) is reused.
-    band_id is 0 — fingerprints are one logical blocking rule."""
+    band_id is 0 — fingerprints are one logical blocking rule.
+
+    Values are deduped per doc: winnowing dedupes positions, not values, so
+    a doc repeating one boilerplate block selects the same fingerprint many
+    times. Distinct values make a band's row count its doc count, so the
+    corpus count is a true band-size proof for candidate_pairs."""
     return docs.select(
         F.col(id_col),
         F.lit(0).alias("band_id"),
-        F.explode(fp_col).alias("band_key"),
+        F.explode(F.array_distinct(fp_col)).alias("band_key"),
     )
 
 
@@ -123,9 +128,9 @@ def substring_pairs(
         docs = fp.localCheckpoint(eager=False)
     else:
         docs = _cut(fp, "substr_docs")  # durable parquet; count below is a footer read
-    # the count is a PROOF no fingerprint band can exceed it — proven-small
-    # corpora take candidate_pairs' grouped tier (identical output incl.
-    # hot-fingerprint drop accounting)
+    # fingerprint_keys dedupes values per doc, so the count is a PROOF no
+    # fingerprint band can exceed it: it picks candidate_pairs' path, whose
+    # pairs and hot-fingerprint drop accounting are the same on either path
     n_docs = docs.count()
     # measured corpus bytes for the verify-attach strategy below; only worth
     # a (tiny) second agg over the checkpointed/parquet docs in the small

@@ -93,9 +93,10 @@ class DedupPipeline:
         # counts per physical partition per stage, so a resumed or audited
         # run can see exactly which partition of which stage produced what.
         self.lineage_rows: list[tuple] = []
-        # piggy-backed per-stage aggregates from the lineage job (r6): e.g.
-        # prepare's sum(n_shingles), so the adaptive-gate decision costs no
-        # extra scan of the (wide) prepare output
+        # THIS run's per-stage totals from the lineage job: "rows" plus any
+        # piggy-backed aggregates (e.g. prepare's sum(n_shingles), so the
+        # adaptive-gate decision costs no extra scan of the wide prepare
+        # output). Reset by run(); a resumed or uncounted stage has no entry.
         self.stage_aggs: dict[str, dict] = {}
         self.run_id: str | None = None
 
@@ -154,9 +155,10 @@ class DedupPipeline:
         paid a full extra scan of every stage's (wide) output per stage.
 
         lineage_aggs: extra named aggregates piggy-backed onto the lineage
-        job (per-partition, summed into self.stage_aggs[stage]) so stage
-        statistics the pipeline needs — e.g. the adaptive verify gate's mean
-        shingles/doc — cost zero additional jobs."""
+        job (per-partition, summed into self.stage_aggs[stage] next to the
+        row count) so stage statistics the pipeline needs — e.g. the
+        adaptive verify gate's mean shingles/doc — cost zero additional
+        jobs."""
         path = self._stage_path(stage)
         if path and stage in manifest["done"]:
             out = self.spark.read.parquet(path)
@@ -208,6 +210,7 @@ class DedupPipeline:
             ).collect()[0]
             input_fingerprint = f"n={row['n']},h={row['h']}"
         manifest = self._load_manifest(input_fingerprint or "unspecified")
+        self.stage_aggs = {}
         self.run_id = hashlib.sha256(
             (self.config.to_json() + "|" + (input_fingerprint or "unspecified")).encode()
         ).hexdigest()[:16]
@@ -244,23 +247,13 @@ class DedupPipeline:
             signatures, id_col=self.id_col, bands=cfg.bands, rows_per_band=cfg.rows_per_band
         )
         # the 32x band fanout stays a codegen expression feeding the single
-        # groupBy(band_key) shuffle inside candidate_pairs — never persisted.
-        # The signatures lineage job already counted the corpus (one row per
-        # doc); that count is a PROOF no band can exceed it, so proven-small
-        # corpora take candidate_pairs' grouped tier (no window sort, no
-        # persist, no salt join — identical output incl. drop accounting).
-        # Resumed stages / metrics-off runs report no count -> routed path.
-        # take THIS run's signatures entry (the latest), and only trust a
-        # real count: a resumed stage reports rows=-1, and skipping past it
-        # to an older entry could adopt a stale count from a previous run
-        # on a different input — a false proof, which the fast path's
-        # cap-skip must never receive
-        n_docs = next(
-            (m.rows for m in reversed(self.metrics) if m.stage == "signatures"),
-            None,
-        )
-        if n_docs is not None and n_docs < 0:
-            n_docs = None
+        # band_key shuffle inside candidate_pairs — never persisted. The
+        # signatures lineage job of THIS run counted the corpus (one row per
+        # doc); that count is the band-size proof that picks candidate_pairs'
+        # path: grouped tier up to GROUPED_TIER_ROWS docs, routed above.
+        # A resumed stage or a metrics-off run has no count -> routed path.
+        # Either path returns the same pairs and drop accounting.
+        n_docs = self.stage_aggs.get("signatures", {}).get("rows")
         cands, dropped = candidate_pairs(bands, id_col=self.id_col, band_cap=cfg.band_cap,
                                          salt_threshold=cfg.salt_threshold, salt_groups=cfg.salt_groups,
                                          max_band_rows=n_docs)
@@ -373,8 +366,8 @@ class DedupPipeline:
         checkpoint is lazy): row count per physical partition. Appended to
         the lineage table (metrics sink) by write_metrics(); kept in memory
         otherwise. Returns the total row count so the caller never needs a
-        second scan. extra_aggs (name -> sum-combinable Column) are computed
-        per partition in the same job and totalled into
+        second scan. The count and extra_aggs (name -> sum-combinable
+        Column), computed per partition in the same job, are totalled into
         self.stage_aggs[stage]."""
         aggs = [F.count("*").alias("rows")]
         for name, expr in (extra_aggs or {}).items():
@@ -386,13 +379,12 @@ class DedupPipeline:
         )
         for r in counts:
             self.lineage_rows.append((self.run_id, stage, int(r["partition_id"]), int(r["rows"])))
-        if extra_aggs:
-            self.stage_aggs[stage] = {
-                name: sum(r[name] for r in counts if r[name] is not None)
-                for name in extra_aggs
-            }
-            self.stage_aggs[stage]["rows"] = sum(int(r["rows"]) for r in counts)
-        return sum(int(r["rows"]) for r in counts)
+        totals = {
+            name: sum(r[name] for r in counts if r[name] is not None)
+            for name in ("rows", *(extra_aggs or {}))
+        }
+        self.stage_aggs[stage] = totals
+        return totals["rows"]
 
     def lineage_df(self) -> DataFrame:
         return self.spark.createDataFrame(

@@ -427,7 +427,7 @@ class IncrementalDedup:
         docs = docs.localCheckpoint(eager=True)  # cut lineage; reused 4x below
         # count over the materialized checkpoint: the 0-row early-exit probe,
         # and a band-size PROOF for candidate_pairs — micro-batches are small
-        # by construction, so new-x-new takes the grouped tier (r6)
+        # by construction, so new-x-new takes the grouped tier
         n_new = docs.count()
         if n_new == 0:
             fs.touch(self.spark, self._commit_marker(batch_id))
@@ -437,7 +437,7 @@ class IncrementalDedup:
         nb = nb.withColumn("bucket", F.pmod("band_key", F.lit(self.n_buckets)).cast("int"))
         nb = nb.localCheckpoint(eager=True)
 
-        # new x new — full skew machinery above the proof tier
+        # new x new — grouped tier up to GROUPED_TIER_ROWS new docs, routed above
         nn_cands, _ = candidate_pairs(
             nb, band_cap=cfg.band_cap, salt_threshold=cfg.salt_threshold,
             salt_groups=cfg.salt_groups, max_band_rows=n_new

@@ -269,3 +269,26 @@ def test_fused_pipeline_identical_output(spark, corpus):
 
 
 STAGES_EXPECTED = ("prepare", "signatures", "pairs", "verified", "clusters", "canonical")
+
+
+def test_band_proof_comes_from_this_run(spark, monkeypatch):
+    """The band-size proof handed to candidate_pairs is THIS run's signatures
+    count: a pipeline reused after a metered run, now with metrics off, has
+    no count and must pass no proof rather than the earlier corpus's."""
+    import nhse_probabilistic_linkage_spark.plans.pipeline as pipeline_mod
+
+    seen = []
+    real = pipeline_mod.candidate_pairs
+
+    def recording(*args, **kwargs):
+        seen.append(kwargs.get("max_band_rows"))
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(pipeline_mod, "candidate_pairs", recording)
+    corpus_a, _ = synth_pages(spark, 60, seed=21, partitions=2)
+    corpus_b, _ = synth_pages(spark, 40, seed=22, partitions=2)
+    pipe = DedupPipeline(spark, DedupConfig())
+    pipe.run(corpus_a)
+    pipe.collect_metrics = False
+    pipe.run(corpus_b)
+    assert seen == [60, None]

@@ -119,30 +119,6 @@ def test_url_and_repetition_paths_have_no_python(spark):
     assert "FileScan parquet" in plan
 
 
-def test_semi_join_bands_broadcasts_small_key_lists(spark):
-    """The singleton-band pruning must reach the physical plan as a
-    BROADCAST semi-join at small scale (AQE cannot do this alone for a
-    filter over a cached relation — lsh.semi_join_bands decides explicitly)
-    and stay a shuffle join above the key limit."""
-    from nhse_probabilistic_linkage_spark.operators.lsh import semi_join_bands
-
-    bands = spark.range(0, 20_000).select(
-        F.col("id").alias("doc_id"), F.lit(0).alias("band_id"), F.pmod("id", F.lit(4000)).alias("band_key")
-    )
-    # localCheckpoint makes the key list stats-opaque (LogicalRDD defaults to
-    # a huge size estimate) — the same situation as the production filter
-    # over a cached histogram, where AQE can NOT choose broadcast itself
-    keys = spark.range(0, 100).select(F.col("id").alias("band_key")).localCheckpoint(eager=True)
-    small = semi_join_bands(bands, keys)
-    small.write.format("noop").mode("overwrite").save()
-    assert "BroadcastHashJoin" in _plan(small)
-    # above the limit the EXPLICIT hint is withheld; AQE may still convert at
-    # runtime once it sees the shuffle stage's true size (fine — that path
-    # has runtime stats) — assert the fallback is behaviorally identical
-    fallback = semi_join_bands(bands, keys, broadcast_key_limit=10)
-    assert fallback.count() == small.count() == 500
-
-
 def test_verify_join_does_not_broadcast_docs(spark, small_verify):
     pairs, docs = small_verify
     v = verify_pairs(pairs, docs, threshold=0.7)

@@ -9,8 +9,10 @@ timestamps, NULLs), not volume.
 from datetime import datetime, timedelta
 
 import pytest
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 from pyspark.sql import functions as F
+
+from nhse_probabilistic_linkage_spark.operators.lsh import GROUPED_TIER_ROWS, candidate_pairs
 
 TOKEN = st.text(alphabet="abcdefgh", min_size=1, max_size=3)
 DOC = st.lists(TOKEN, min_size=0, max_size=40)
@@ -152,3 +154,76 @@ def test_asof_matches_brute_force(spark, lefts, rights):
         earlier = [r for r in rights if r <= s]
         want = float(max(earlier)) if earlier else None
         assert got[i] == want, (i, s)
+
+
+def _band_model(rows, band_cap):
+    """Reference semantics of candidate_pairs in plain Python: a band's size
+    counts every row (duplicate (band, id) rows included), bands above
+    band_cap are dropped and reported, every other band yields all pairs of
+    its distinct ids, and match_key is the smallest band_id that fired."""
+    members: dict[int, list[int]] = {}
+    band_ids: dict[int, int] = {}
+    for doc_id, band_id, band_key in rows:
+        members.setdefault(band_key, []).append(doc_id)
+        band_ids[band_key] = min(band_ids.get(band_key, band_id), band_id)
+    pairs: dict[tuple[int, int], int] = {}
+    dropped = []
+    for band_key, ids in members.items():
+        band_id = band_ids[band_key]
+        if band_cap is not None and len(ids) > band_cap:
+            dropped.append((band_key, len(ids)))
+            continue
+        uniq = sorted(set(ids))
+        for i, a in enumerate(uniq):
+            for b in uniq[i + 1:]:
+                pairs[(a, b)] = min(pairs.get((a, b), band_id), band_id)
+    return {(a, b, m) for (a, b), m in pairs.items()}, sorted(dropped)
+
+
+_FIXED_BANDS = (
+    [(i, 1) for i in range(3)]  # cold band
+    + [(10 + i, 2) for i in range(6)]  # hot band (salted on the routed path)
+    + [(100 + i, 3) for i in range(12)]  # mega band: over band_cap
+)
+
+
+@settings(**_SETTINGS)
+@given(
+    rows=st.lists(
+        st.tuples(st.integers(min_value=0, max_value=12), st.integers(min_value=0, max_value=5)),
+        max_size=60,
+    ),
+    band_cap=st.one_of(st.none(), st.integers(min_value=1, max_value=12)),
+    salt_threshold=st.one_of(st.none(), st.integers(min_value=1, max_value=6)),
+    proof=st.integers(min_value=0, max_value=GROUPED_TIER_ROWS),
+)
+# the fixed cold / hot / over-cap case, true proof above band_cap
+@example(rows=_FIXED_BANDS, band_cap=10, salt_threshold=4, proof=21)
+# false proof at or below band_cap: the hot band must still be reported
+@example(rows=[(i, 0) for i in range(6)], band_cap=4, salt_threshold=None, proof=3)
+# duplicate (band, id) rows push a band over the cap under a false proof
+@example(rows=[(1, 0), (1, 0), (1, 0), (2, 0)], band_cap=3, salt_threshold=2, proof=2)
+@example(rows=[(i, 0) for i in range(6)] + [(1, 1)], band_cap=None, salt_threshold=2, proof=2)
+@example(rows=[], band_cap=5, salt_threshold=None, proof=0)
+def test_candidate_pairs_grouped_tier_equals_routed(spark, rows, band_cap, salt_threshold, proof):
+    """Differential test: the grouped tier (any proof <= GROUPED_TIER_ROWS,
+    true or false) and the routed path (no proof) return the same
+    (id_l, id_r, match_key) set AND the same (band_key, band_size) drop
+    accounting, and both equal the plain-Python model."""
+    # band_id is a function of band_key, as in every real band table
+    triples = [(doc_id, band_key % 3, band_key) for doc_id, band_key in rows]
+    bands = spark.createDataFrame(triples, "doc_id long, band_id int, band_key long")
+
+    def run(max_band_rows):
+        pairs, dropped = candidate_pairs(
+            bands, band_cap=band_cap, salt_threshold=salt_threshold, salt_groups=3,
+            max_band_rows=max_band_rows,
+        )
+        return (
+            {(r.id_l, r.id_r, r.match_key) for r in pairs.collect()},
+            sorted((r.band_key, r.band_size) for r in dropped.collect()),
+        )
+
+    routed = run(None)
+    assert run(proof) == routed
+    assert routed == _band_model(triples, band_cap)

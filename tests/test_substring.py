@@ -254,3 +254,51 @@ def test_winnow_batch_grouping_invariant():
         assert list(x) == list(y)
     for x, y in zip(g1, g2):
         assert list(x) == list(y)
+
+
+def test_repeated_boilerplate_keeps_band_proof_true(spark):
+    """A doc that repeats one boilerplate block selects the same winnowing
+    fingerprint many times. fingerprint_keys dedupes values per doc, so no
+    fingerprint band exceeds the doc count and max_band_rows=n_docs is a true
+    proof. With band_cap below the raw repeated band's row count but at or
+    above n_docs, the grouped tier's pairs and dropped bands equal the
+    routed path's."""
+    from pyspark.sql import functions as F
+
+    from nhse_probabilistic_linkage_spark.functions.winnow import with_fingerprints
+    from nhse_probabilistic_linkage_spark.operators.lsh import candidate_pairs
+    from nhse_probabilistic_linkage_spark.operators.substring import fingerprint_keys
+
+    rng = random.Random(77)
+    vocab = "alpha bravo charlie delta echo foxtrot golf hotel india juliet".split()
+    block = " ".join(rng.choice(vocab) for _ in range(20))
+    rows = [
+        (1, " ".join([block] * 12)),
+        (2, "intro text " + block + " outro text"),
+        (3, block + " trailing words here"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    fp = with_fingerprints(
+        df.select("doc_id", normalize_text("text").alias("norm_text")), k=16, window=49
+    ).localCheckpoint(eager=True)
+    raw = fp.where("doc_id = 1").first()["fingerprints"]
+    assert len(raw) > len(set(raw))  # the repeated block re-selects values
+
+    n_docs = fp.count()
+    raw_band = fp.select(F.explode("fingerprints").alias("k")).groupBy("k").count()
+    band_cap = n_docs
+    assert raw_band.agg(F.max("count")).first()[0] > band_cap
+
+    keys = fingerprint_keys(fp)
+    assert keys.groupBy("band_key").count().agg(F.max("count")).first()[0] <= n_docs
+
+    def run(max_band_rows):
+        pairs, dropped = candidate_pairs(keys, band_cap=band_cap, max_band_rows=max_band_rows)
+        return (
+            {(r.id_l, r.id_r, r.match_key) for r in pairs.collect()},
+            sorted((r.band_key, r.band_size) for r in dropped.collect()),
+        )
+
+    grouped, routed = run(n_docs), run(None)
+    assert grouped == routed
+    assert {(a, b) for a, b, _ in grouped[0]} == {(1, 2), (1, 3), (2, 3)}
